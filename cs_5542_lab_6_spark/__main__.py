@@ -22,9 +22,8 @@ import json
 import os
 import sys
 
-# Resolve the default data directory from the environment (the same
-# variable bench.py honors) so the CLI is portable; the literal is only
-# the last-resort fallback for this test environment (ADVICE r5).
+# Resolve the default data directory from $SPARK_GRAFT_SF_DIR so the CLI
+# is portable; the literal is only the last-resort fallback.
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 

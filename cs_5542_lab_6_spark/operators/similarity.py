@@ -799,14 +799,16 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulation order anywhere, so the DuckDB twin matches
     bit-for-bit.
 
-    Scale shape: points live in long form (vec_id, dim, val) — the
-    assign step is an equi-join on ``dim`` (a broadcast of K*DIM centroid
-    rows) + one partial agg per (vec, cluster); the update is one partial
-    agg per (cluster, dim). Both are map-side-combinable shuffles; no
-    step is quadratic in corpus size, and K iterations are K linear
-    passes (at 100 TB you cache the long-form points once and reuse)."""
+    Scale shape: each point is one row holding its fixed-point
+    coordinate array (vec_id, va). The assign step is in-row: the K
+    centroids ride ONE broadcast row (a 1-row broadcast nested-loop
+    join) and each vector computes its K distances and argmin with no
+    exchange. The update posexplodes the assigned points to (dim, val)
+    map-side and is one partial agg per (cluster, dim). No step is
+    quadratic in corpus size, and the iterations are linear passes (at
+    100 TB you cache the array-form points once and reuse)."""
     # try/finally cache hygiene (same idiom as dedup_clusters /
-    # kg_pagerank): the long-form points cache backs every iteration,
+    # kg_pagerank): the array-form points cache backs every iteration,
     # the K-row result is eagerly cut so the cache is unreferenced, and
     # the cache always drops on return.
     pts = kmeans_points(load_table(spark, sf_dir, "embeddings")).cache()

@@ -406,19 +406,18 @@ def _warm_path(
 # stages, so their schemas are deterministic — this memo is the catalog a
 # real 100 TB deployment reads schemas from (tables there are catalog
 # entries, never schema-inferred per query). Keyed on the _SUCCESS commit
-# mtime so a rebuilt stage re-infers exactly once; NO data or results are
-# cached — every query still scans the parquet files in full.
-_STAGE_SCHEMAS: dict[str, tuple[float, object]] = {}
+# mtime in integer nanoseconds (a float mtime rounds away sub-microsecond
+# differences) so a rebuilt stage re-infers exactly once; NO data or
+# results are cached — every query still scans the parquet files in full.
+_STAGE_SCHEMAS: dict[str, tuple[int, object]] = {}
 
 
 def read_stage(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan of a committed warehouse stage, schema served from
     the session catalog memo (inferred once per commit, see above)."""
     marker = os.path.join(path, "_SUCCESS")
-    if os.environ.get("SPARK_GRAFT_SCHEMA_MEMO", "1") == "0":
-        return spark.read.parquet(path)  # measurement/debug kill-switch
     try:
-        mt = os.path.getmtime(marker)
+        mt = os.stat(marker).st_mtime_ns
     except OSError:
         # remote URI or glob: no local marker to key on — infer as before
         return spark.read.parquet(path)

@@ -27,23 +27,32 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_mem() -> str:
+    """Driver heap when ``$SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter of
+    the host's physical RAM in whole GB, at least 1g. Local mode runs the
+    executors inside this one JVM, and the Python workers, page cache and
+    off-heap buffers share the rest of the host."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, phys // 4 // 1024**3)}g"
+
+
 def get_spark(
     app_name: str = "cs_5542_lab_6_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    pretouch: bool | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
     In local mode there is one JVM; ``spark.driver.memory`` must be set
     before JVM start, so we only apply it when constructing a fresh
-    session.
+    session. ``$SPARK_GRAFT_DRIVER_MEM`` overrides the host-derived
+    default (``default_driver_mem``).
     """
     cpus = int(DEFAULT_CPUS)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -92,39 +101,6 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", driver_mem)
     )
-    if pretouch is None:
-        pretouch = os.environ.get("SPARK_GRAFT_PRETOUCH", "0") != "0"
-    if pretouch:
-        # Pre-commit + pre-fault the whole heap at JVM start (-Xms=-Xmx +
-        # AlwaysPreTouch): this VM intermittently backs ANONYMOUS pages
-        # through a slow host fault path (first touch measured 27 us/page
-        # — 6.8 s to fault 256 MB — while file pages, fsync and warm CPU
-        # stay normal), which taxes exactly the allocation-heavy
-        # operators as their lazily-grown heap faults in mid-query: the
-        # 10x cold kg_edges derive measured 122.9/87.3 s lazy vs
-        # 41.3/26.6 s pre-touched, same code. Pre-touching moves that
-        # one-time cost to session startup, outside every timed or
-        # driver-observed number; on a healthy host it costs seconds.
-        # Applies only at JVM creation (getOrCreate reuse ignores it);
-        # one JVM per process, so each process pays it at most once.
-        # OPT-IN (pretouch=True param, or $SPARK_GRAFT_PRETOUCH=1 for CLI
-        # processes like bench.py that own their whole environment): on a
-        # degraded window the 24g pre-fault took 130-214s, which is fine
-        # for a process that owns its startup but a timeout risk inside
-        # any harness that bounds session creation (e.g. a driver smoke
-        # check, or a CLI subprocess spawned under a test timeout — the
-        # param form exists precisely so the test fixture can opt in
-        # WITHOUT exporting the env var to its subprocesses).
-        # MERGE with any caller-supplied extraJavaOptions rather than
-        # last-write-wins: a caller passing their own JVM flags must not
-        # silently discard the pre-touch (or vice versa). Caller flags
-        # come second so they win any per-flag conflict.
-        extra_conf = dict(extra_conf or {})
-        caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", "")
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch {caller_opts}".strip(),
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

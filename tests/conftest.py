@@ -19,25 +19,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # pre-fault the heap once at JVM start (session.py: AlwaysPreTouch):
-    # keeps this VM's intermittent slow anonymous-page backing out of
-    # per-test timings and the scale canary's build-time bound. Param
-    # form, NOT the env var: subprocess-spawning tests (test_cli) must
-    # not inherit a 130-214s pre-fault inside their own timeouts.
-    #
-    # RAM floor: pretouch COMMITS AND FAULTS the full driver heap
-    # (default $SPARK_GRAFT_DRIVER_MEM = 24g) at session start — fine on
-    # this 125 GB VM, an OOM on small hosts. Set
-    # SPARK_GRAFT_TEST_DRIVER_MEM (e.g. "4g") to shrink the test JVM
-    # without touching what bench.py / the CLI use.
-    test_mem = os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
-    if test_mem:
-        os.environ["SPARK_GRAFT_DRIVER_MEM"] = test_mem
     spark = get_spark(
         app_name="cs5542-tests",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
-        pretouch=True,
     )
     yield spark
 

@@ -219,6 +219,40 @@ def test_partitioned_checkpoint_scan_prunes_directories(spark, sf_dir, tmp_path)
         assert "publication_year" not in data_filters.group(1)
 
 
+def test_read_stage_schema_memo_tracks_rebuilds(spark, tmp_path):
+    """read_stage serves a committed stage's schema from a memo keyed on
+    the _SUCCESS marker's mtime in nanoseconds: a memo hit must equal
+    fresh inference, and a stage rebuilt in place with a new schema must
+    be re-inferred even when the new marker is 1 ns newer (a float mtime
+    key cannot tell those two apart and would serve the stale schema)."""
+    from cs_5542_lab_6_spark.pipeline import corpus
+
+    path = str(tmp_path / "stage")
+    marker = os.path.join(path, "_SUCCESS")
+    t0 = 1_700_000_000_123_456_700
+
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s").write.mode(
+        "overwrite"
+    ).parquet(path)
+    os.utime(marker, ns=(t0, t0))
+    first = corpus.read_stage(spark, path)
+    entry = corpus._STAGE_SCHEMAS[path]
+    hit = corpus.read_stage(spark, path)
+    assert corpus._STAGE_SCHEMAS[path] is entry  # served from the memo
+    fresh = spark.read.parquet(path)
+    assert hit.schema == fresh.schema == first.schema
+    assert sorted(hit.collect()) == sorted(fresh.collect())
+
+    spark.range(2).selectExpr("id * 10 AS x", "id > 0 AS flag").write.mode(
+        "overwrite"
+    ).parquet(path)
+    os.utime(marker, ns=(t0 + 1, t0 + 1))
+    rebuilt = corpus.read_stage(spark, path)
+    assert rebuilt.schema == spark.read.parquet(path).schema
+    assert rebuilt.columns == ["x", "flag"]
+    assert sorted(r.x for r in rebuilt.collect()) == [0, 10]
+
+
 def test_build_report_carries_observed_metrics(spark, sf_dir, tmp_path):
     """Fresh stages carry Observation-API metrics captured during the
     write pass: observed row count equals the on-disk count, leading

